@@ -9,12 +9,14 @@ the encoded actions over the source *schemas only* (no data touched —
 Spark schemas are free on lazy frames), lists the legal next actions as
 links that append one action and re-encode, and links each live frame
 to ``/view``. ``/view`` is the only route that executes, and it goes
-through :class:`.cache.ResultCache`: the first hit materializes the
-frame to parquet keyed by the canonical plan digest, every later page /
-re-visit / CSV download of the same state is a zero-work
-``spark.read.parquet`` plus an offset/limit page — the reference needs
-Celery + pickle polling for this (serve.py:25-107); on Spark the
-driver/executor split plus the parquet cache covers it synchronously.
+through :class:`.cache.ResultCache`: a cold view runs the frame's plan
+once, in the parquet write keyed by the canonical plan digest, and
+renders its page from the written files. Every later page / re-visit /
+CSV download of the same state reuses the cache's read handle: the row
+count comes from the part-file footers and the page collect is the one
+Spark job — the reference needs Celery + pickle polling for this
+(serve.py:25-107); on Spark the driver/executor split plus the parquet
+cache covers it synchronously.
 
 Scale: pagination compiles to GlobalLimit operators inside Spark
 (view.py:25), so a 100 TB result ships at most ``page_size`` rows to
@@ -104,18 +106,19 @@ def create_app(
             return_latest_first=False,
         )
 
-    def _cached_frame(bs: BrowseState, q: str, index: int):
-        key = plan_key(list(bs.actions), [*bs.files, f"frame={index}"])
-        return cache.get_or_compute(
-            spark, key, lambda: _frames(bs)[index]
-        )
+    def _key(bs: BrowseState, index: int) -> str:
+        return plan_key(list(bs.actions), [*bs.files, f"frame={index}"])
 
-    def _frame_or_wait(bs: BrowseState, index: int):
-        """Background mode: (df, None) when ready, (None, response)
-        while computing or after failure."""
+    def _frame(bs: BrowseState, index: int, key: str):
+        """(df, None) when the cached frame is ready. Background mode
+        returns (None, response) while computing or after failure."""
         from flask import Response
 
-        key = plan_key(list(bs.actions), [*bs.files, f"frame={index}"])
+        def compute():
+            return _frames(bs)[index]
+
+        if not background:
+            return cache.get_or_compute(spark, key, compute), None
         st = cache.status(key)
         if st == "done":
             return cache.load(spark, key), None
@@ -125,7 +128,7 @@ def create_app(
                 status=500,
                 mimetype="text/html",
             )
-        cache.submit(key, lambda: _frames(bs)[index])
+        cache.submit(key, compute)
         return None, Response(_WAIT_TPL, status=202, mimetype="text/html")
 
     @app.route("/explore/")
@@ -170,15 +173,13 @@ def create_app(
     @app.route("/view/<int:page_no>/<int:index>/<path:q>")
     def view(page_no: int, index: int, q: str):
         bs = _bs(q)
-        if background:
-            df, wait = _frame_or_wait(bs, index)
-            if wait is not None:
-                return wait
-        else:
-            df = _cached_frame(bs, q, index)
-        if df is None:
+        key = _key(bs, index)
+        df, wait = _frame(bs, index, key)
+        if wait is not None:
+            return wait
+        total = cache.rows(key)
+        if df is None or total is None:  # deleted since it was served
             abort(404)
-        total = df.count()
         n_pages = max((total + page_size - 1) // page_size, 1)
         page_df = page(df, page_no, page_size)
         qq = quote(q, safe="")
@@ -198,12 +199,9 @@ def create_app(
     @app.route("/download/csv/<int:index>/<path:q>")
     def download_csv(index: int, q: str):
         bs = _bs(q)
-        if background:
-            df, wait = _frame_or_wait(bs, index)
-            if wait is not None:
-                return wait
-        else:
-            df = _cached_frame(bs, q, index)
+        df, wait = _frame(bs, index, _key(bs, index))
+        if wait is not None:
+            return wait
         if df is None:
             abort(404)
         body = to_csv(page(df, 0, page_size))
